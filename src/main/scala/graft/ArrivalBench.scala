@@ -61,9 +61,7 @@ object ArrivalBench {
     val arms = if (args.length > 2) args(2).split(",").toSeq
       else if (mode == "ann") Seq("ingest", "retrain")
       else Seq("bucketed", "flat")
-    val spark = SessionDefaults(SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"),
-        "32")
+    val spark = SessionDefaults.local()
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -25,14 +25,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // NOTE: AQE's coalescePartitions.parallelismFirst stays at the
     // default (true). Measured with false: post-shuffle stages coalesce
     // to 1 partition at this data size and every compute-heavy window/
     // agg serializes (ev03 0.4s → 2.1s) — task-scheduling floor is the
     // cheaper side of that trade here.
-    val spark = SessionDefaults(SparkSession.builder()
-        .master(s"local[$cpus]"), cpus)
+    val spark = SessionDefaults.local()
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev gauge: jobs + stages one registered query schedules — the
   * scheduling-floor metric behind the round-12/14 dd16 shaves
   * (jobs/ingest 28 → 26 → 23), generalized in round 14 to ANY
@@ -18,8 +17,7 @@ object JobCount {
     // a per-query sbt launch costs ~40 s of pure JVM start-up)
     val names = args.headOption.getOrElse("dd16_incremental_lsh")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val spark = SessionDefaults(
-        SparkSession.builder().master("local[32]"), "32")
+    val spark = SessionDefaults.local()
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Standalone epoch gauge for the Bench spark_probe instrument: runs
   * [[Bench.sparkProbeOnce]] — literally the same definition the health
@@ -12,8 +11,7 @@ import org.apache.spark.sql.SparkSession
   * (mostly single-threaded) — this is the multi-core JVM instrument. */
 object ProbeSample {
   def main(args: Array[String]): Unit = {
-    val spark = SessionDefaults(
-        SparkSession.builder().master("local[32]"), "32")
+    val spark = SessionDefaults.local()
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id % 7)").collect()

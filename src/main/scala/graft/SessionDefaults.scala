@@ -22,4 +22,11 @@ object SessionDefaults {
       // one pass. Scale-honest — the probes' caps bound what ships to
       // the driver regardless of how many partitions one job touches.
       .config("spark.sql.limit.initialNumPartitions", cpus)
+
+  /** A `local[n]` builder whose shuffle width matches its master, with n
+    * the host's core count from `SPARK_GRAFT_CPUS` (32 when unset). */
+  def local(): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    apply(SparkSession.builder().master(s"local[$cpus]"), cpus)
+  }
 }

@@ -2,6 +2,7 @@ package graft.checks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.Q
 import graft.tables.Tables
 
@@ -111,10 +112,8 @@ object Checks {
       .mapPartitions { it =>
         val conf = bconf.value.value
         it.map { case (t, path) =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(path), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try (t, r.getRecordCount) finally r.close()
+          (t, Footers.read(path, conf).getBlocks.asScala
+            .map(_.getRowCount).sum)
         }
       }
       .toDF("table_name", "n")

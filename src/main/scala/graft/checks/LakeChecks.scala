@@ -15,15 +15,19 @@ import graft.functions.Strings.quoteName
   * action is a Spark job returning a violation count.
   *
   * Scale notes: CHECKALLOC/CHECKCATALOG touch only filesystem metadata and
-  * parquet footers (no data scan). CHECKTABLE is exactly one full scan with
-  * map-side partial aggregation — the minimal plan for content validation —
-  * and its PHYSICAL_ONLY tier reads footers only.
+  * parquet footers, read on the driver once per pass per pinned file (see
+  * [[PassFooters]]): phase 1 runs no Spark job. CHECKTABLE is exactly one
+  * full scan with map-side partial aggregation — the minimal plan for
+  * content validation — under the schema the pinned footers give, so
+  * Spark never infers one; its PHYSICAL_ONLY tier reads footers only.
   */
 object LakeChecks {
 
   /** CHECKALLOC: every storage unit is present, openable, and non-empty —
-    * files exist, no zero-byte parquet, footers parse
-    * (ref IC:547 DBCC CHECKALLOC).
+    * files exist, no zero-byte parquet, every pinned file's footer parses
+    * (ref IC:547 DBCC CHECKALLOC). An empty manifest counts 1; otherwise
+    * each pinned file that is zero-length or whose footer does not read
+    * counts 1.
     *
     * `manifests` pins the per-run file universe (ref IC:519-571 snapshot;
     * see [[graft.catalog.TableManifest]]): a table with a pinned manifest
@@ -31,49 +35,42 @@ object LakeChecks {
     * concurrent writer after inventory time is invisible to this run, and
     * a pinned file that vanished reads as a violation. Tables without an
     * entry fall back to a capture-at-action listing (the pre-manifest
-    * behavior, kept for direct callers). */
+    * behavior, kept for direct callers). `footers` is the pass's footer
+    * memo: the first phase-1 command to touch a table pays its reads. */
   def checkAlloc(spark: SparkSession, db: String, tables: Seq[InventoryRow],
       maxDop: Int,
-      manifests: Map[(String, String, String), TableManifest] = Map.empty)
-      : (String, () => Long) = {
+      manifests: Map[(String, String, String), TableManifest] = Map.empty,
+      footers: PassFooters = new PassFooters): (String, () => Long) = {
     val cmd = s"CHECKALLOC ${quoteName(db)} WITH NO_INFOMSGS, ALL_ERRORMSGS" +
       maxDopSuffix(maxDop)
     (cmd, () => {
       tables.map { t =>
         val m = manifestFor(spark, t, manifests)
-        if (m.files.isEmpty) 1L
-        else {
-          val zero = m.files.count(_.length == 0L).toLong
-          // footer parse: schema read forces footer decode, no data scan;
-          // the read targets the PINNED files, so a pinned-then-deleted
-          // file surfaces here instead of silently dropping out
-          val footerBad =
-            try { readPinned(spark, m).schema; 0L }
-            catch { case _: Throwable => 1L }
-          zero + footerBad
-        }
+        if (m.files.isEmpty) 1L else footers(spark, m).badFiles
       }.sum
     })
   }
 
-  /** CHECKCATALOG: metadata consistency — schema non-empty, column names
-    * unique, row-count metadata consistent with a metadata-only count
-    * (ref IC:554 DBCC CHECKCATALOG). Reads via the pinned manifest when
-    * one is supplied (see [[checkAlloc]]). */
+  /** CHECKCATALOG: metadata consistency — schema derivable and non-empty,
+    * column names unique (ref IC:554 DBCC CHECKCATALOG). The schema comes
+    * from the pinned footers (see [[checkAlloc]]); a table whose schema
+    * cannot be derived counts 1. */
   def checkCatalog(spark: SparkSession, db: String, tables: Seq[InventoryRow],
-      manifests: Map[(String, String, String), TableManifest] = Map.empty)
-      : (String, () => Long) = {
+      manifests: Map[(String, String, String), TableManifest] = Map.empty,
+      footers: PassFooters = new PassFooters): (String, () => Long) = {
     val cmd = s"CHECKCATALOG ${quoteName(db)} WITH NO_INFOMSGS"
     (cmd, () => {
       tables.map { t =>
         try {
-          val schema = readPinned(spark,
-            manifestFor(spark, t, manifests)).schema
-          val dupCols =
-            schema.fieldNames.map(_.toLowerCase).groupBy(identity)
-              .count(_._2.length > 1).toLong
-          val emptySchema = if (schema.isEmpty) 1L else 0L
-          dupCols + emptySchema
+          footers(spark, manifestFor(spark, t, manifests)).schema match {
+            case Some(schema) =>
+              val dupCols =
+                schema.fieldNames.map(_.toLowerCase).groupBy(identity)
+                  .count(_._2.length > 1).toLong
+              val emptySchema = if (schema.isEmpty) 1L else 0L
+              dupCols + emptySchema
+            case None => 1L
+          }
         } catch { case _: Throwable => 1L }
       }.sum
     })
@@ -88,7 +85,8 @@ object LakeChecks {
     */
   def checkTable(spark: SparkSession, t: InventoryRow, physicalOnly: Boolean,
       dataPurity: Boolean, maxDop: Int,
-      manifest: Option[TableManifest] = None): (String, () => Long) = {
+      manifest: Option[TableManifest] = None,
+      footers: PassFooters = new PassFooters): (String, () => Long) = {
     val opts =
       (if (physicalOnly) Seq("PHYSICAL_ONLY") else Seq.empty) ++
         (if (!physicalOnly && dataPurity) Seq("DATA_PURITY") else Seq.empty)
@@ -102,7 +100,7 @@ object LakeChecks {
       // run's snapshot of the table — phase 2 profiles the same rows
       // phase 1 allocated, even if a writer appended files in between
       val df = manifest match {
-        case Some(m) => readPinned(spark, m)
+        case Some(m) => readPinned(spark, m, footers)
         case None => readTable(spark, t.path)
       }
       if (physicalOnly) { df.count(); 0L } // footer-driven count, no decode
@@ -124,12 +122,14 @@ object LakeChecks {
       (if (opts.nonEmpty) opts.mkString(", ", ", ", "") else "") +
       maxDopSuffix(maxDop)
     (cmd, () => {
-      val (_, alloc) = checkAlloc(spark, db, tables, maxDop, manifests)
-      val (_, cat) = checkCatalog(spark, db, tables, manifests)
+      val footers = new PassFooters
+      val (_, alloc) = checkAlloc(spark, db, tables, maxDop, manifests,
+        footers)
+      val (_, cat) = checkCatalog(spark, db, tables, manifests, footers)
       alloc() + cat() + tables.map(t =>
         checkTable(spark, t, physicalOnly, dataPurity, maxDop,
-          manifests.get(
-            (t.database_name, t.schema_name, t.object_name)))._2()).sum
+          manifests.get((t.database_name, t.schema_name, t.object_name)),
+          footers)._2()).sum
     })
   }
 
@@ -166,7 +166,7 @@ object LakeChecks {
   }
 
   /** One-pass violation aggregate over a DataFrame of any schema. */
-  private[checks] def violationCount(df: DataFrame, dataPurity: Boolean): Long = {
+  private[graft] def violationCount(df: DataFrame, dataPurity: Boolean): Long = {
     val checks: Seq[Column] = df.schema.fields.toSeq.flatMap { f =>
       val c = col(quoted(f.name))
       f.dataType match {
@@ -199,12 +199,17 @@ object LakeChecks {
   }
 
   /** Read EXACTLY a pinned manifest's files (explicit file list — Spark
-    * never re-lists the directory, so the run's snapshot governs). An
-    * empty manifest reads as an empty-path failure upstream; callers
-    * guard on `m.files.isEmpty` first where that is a violation. */
-  private def readPinned(spark: SparkSession, m: TableManifest) = {
+    * never re-lists the directory, so the run's snapshot governs) under
+    * the schema its pinned footers give, so Spark infers none. A table
+    * whose schema cannot be derived (an empty manifest, or an unreadable
+    * first non-empty file) throws. */
+  private def readPinned(spark: SparkSession, m: TableManifest,
+      footers: PassFooters) = {
+    val schema = footers(spark, m).schema.getOrElse(
+      throw new IllegalStateException(
+        s"no parquet schema derivable from ${m.files.size} pinned file(s)"))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(m.paths: _*)
+    spark.read.schema(schema).parquet(m.paths: _*)
   }
 
   /** The pinned manifest for `t`, or a capture-at-action fallback for

@@ -117,6 +117,10 @@ final class Scheduler(
         futures.map(_.get()).toMap
       } finally capPool.shutdown()
     }
+    // The pinned manifests' parquet footers, read once per pass on the
+    // driver by the first check that needs them: phase 1 derives its
+    // verdicts from them and phase 2 its scan schema.
+    val footers = new graft.checks.PassFooters
 
     // Stage 9: reconcile into persistent state (3-clause MERGE).
     var state = StateStore.reconcile(stateStore.load(), scan)
@@ -182,7 +186,8 @@ final class Scheduler(
       if (!pastDeadline()) {
         val tables = scanByDb.getOrElse(db, Seq.empty)
         val (allocCmd, allocAction) =
-          LakeChecks.checkAlloc(spark, db, tables, config.maxDop, manifests)
+          LakeChecks.checkAlloc(spark, db, tables, config.maxDop, manifests,
+            footers)
         executed += allocCmd
         submit { () =>
           val r1 = executor.run(db, "", "", "DB", allocCmd,
@@ -190,7 +195,7 @@ final class Scheduler(
           foldLock.synchronized(tally(r1.violations))
         }
         val (catCmd, catAction) =
-          LakeChecks.checkCatalog(spark, db, tables, manifests)
+          LakeChecks.checkCatalog(spark, db, tables, manifests, footers)
         executed += catCmd
         submit { () =>
           val r2 = executor.run(db, "", "", "DB", catCmd,
@@ -330,7 +335,7 @@ final class Scheduler(
             } else {
               val (cmd, action) = LakeChecks.checkTable(spark, t,
                 config.physicalOnly, config.dataPurity, config.maxDop,
-                pinned)
+                pinned, footers)
               executed += cmd // submission order — the golden sequence
               val start = clock.now() // driver tick: deterministic instant
               def runOne(): Unit = {

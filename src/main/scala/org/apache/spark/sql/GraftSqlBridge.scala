@@ -26,4 +26,19 @@ object GraftSqlBridge {
   def serializableHadoopConf(conf: org.apache.hadoop.conf.Configuration)
       : org.apache.spark.util.SerializableConfiguration =
     new org.apache.spark.util.SerializableConfiguration(conf)
+
+  /** The Spark schema of one parquet file from its already-read footer,
+    * derived as Spark's schema inference derives it: the file's Spark row
+    * metadata when present, else the parquet-to-Spark converter under the
+    * session's SQL conf. No Spark job runs. */
+  def parquetSchema(spark: SparkSession, path: String,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(
+        new org.apache.hadoop.fs.Path(path), footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 }

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.DirInventory
-import graft.checks.LakeChecks
+import graft.catalog.{DirInventory, InventoryRow, TableManifest}
+import graft.checks.{LakeChecks, PassFooters}
 import graft.tables.Tables
 
 /** The full CheckCommand vocabulary against clean + corrupt inputs. */
@@ -12,6 +12,53 @@ class LakeChecksSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sfDir}
 
   private def inv = new DirInventory(spark, Map("testdb" -> sfDir))
+
+  private def pin(rows: Seq[InventoryRow])
+      : Map[(String, String, String), TableManifest] =
+    rows.map(r => (r.database_name, r.schema_name, r.object_name) ->
+      TableManifest.capture(spark, r)).toMap
+
+  /** Spark jobs `body` starts from this thread. A fence job in a second
+    * group is started after `body`; the listener bus delivers in order,
+    * so once the fence is seen every job of `body` has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = "lakechecks-" + java.util.UUID.randomUUID()
+    val fence = group + "-fence"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(j.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group) jobs.incrementAndGet()
+        else if (g == fence) fenced.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(fence, "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  /** A database of three tables: two single files and a 4-part directory. */
+  private lazy val multiDb: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-multi").toString
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Seq("nation", "region").foreach { t =>
+      spark.read.parquet(s"$sfDir/$t.parquet").coalesce(1)
+        .write.parquet(s"$dir/$t.parquet")
+    }
+    Tables.orders(spark, sfDir).repartition(4)
+      .write.parquet(s"$dir/orders.parquet")
+    dir
+  }
 
   test("CHECKDB composes alloc + catalog + every table (ref DIC:1350)") {
     val tables = inv.objects("testdb")
@@ -124,5 +171,111 @@ class LakeChecksSpec extends AnyFunSuite {
       tdir.getPath)
     val (_, action) = LakeChecks.checkAlloc(spark, "testdb", Seq(t), 0)
     assert(action() >= 1L)
+  }
+
+  test("CHECKALLOC parses every pinned footer, not only the first") {
+    // a good part-00000 and a non-empty garbage part-00001: schema
+    // inference reads only the first file's footer and passes the table
+    val dir = java.nio.file.Files.createTempDirectory("graft-garbage").toString
+    val tdir = s"$dir/t.parquet"
+    spark.read.parquet(s"$sfDir/nation.parquet").coalesce(1)
+      .write.parquet(tdir)
+    val good = new java.io.File(tdir).listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(good.length === 1 && good.head.getName.startsWith("part-00000"))
+    val junk = new Array[Byte](5000)
+    new scala.util.Random(7).nextBytes(junk)
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$tdir/part-00001-garbage.parquet"), junk)
+    val rows = new DirInventory(spark, Map("db" -> dir)).objects("db")
+    val manifests = pin(rows)
+    assert(manifests.values.head.files.size === 2)
+    val (_, pinned) = LakeChecks.checkAlloc(spark, "db", rows, 0, manifests)
+    assert(pinned() === 1L)
+    val (_, unpinned) = LakeChecks.checkAlloc(spark, "db", rows, 0)
+    assert(unpinned() === 1L)
+    // the schema still derives from the good first file
+    val (_, cat) = LakeChecks.checkCatalog(spark, "db", rows, manifests)
+    assert(cat() === 0L)
+    // the scan reaches the garbage file: an error, never a clean result
+    val (_, table) = LakeChecks.checkTable(spark, rows.head,
+      physicalOnly = false, dataPurity = true, maxDop = 0,
+      manifests.values.headOption)
+    intercept[Exception](table())
+  }
+
+  test("phase 1 runs no Spark job; CHECKTABLE runs only its aggregate") {
+    val rows = new DirInventory(spark, Map("db" -> multiDb)).objects("db")
+    assert(rows.map(_.object_name) === Seq("nation", "orders", "region"))
+    val manifests = pin(rows)
+    val footers = new PassFooters
+    val (_, alloc) =
+      LakeChecks.checkAlloc(spark, "db", rows, 0, manifests, footers)
+    val (_, cat) = LakeChecks.checkCatalog(spark, "db", rows, manifests,
+      footers)
+    var phase1 = -1L
+    assert(jobsOf { phase1 = alloc() + cat() } === 0)
+    assert(phase1 === 0L)
+
+    val orders = rows.find(_.object_name == "orders").get
+    val m = manifests(("db", "main", "orders"))
+    assert(m.files.size === 4)
+    val schema = spark.read.parquet(m.paths: _*).schema
+    val aggregateOnly = jobsOf {
+      LakeChecks.violationCount(
+        spark.read.schema(schema).parquet(m.paths: _*), dataPurity = true)
+    }
+    assert(aggregateOnly > 0)
+    Seq(new PassFooters, footers).foreach { f =>
+      val (_, table) = LakeChecks.checkTable(spark, orders,
+        physicalOnly = false, dataPurity = true, maxDop = 0, Some(m), f)
+      var v = -1L
+      assert(jobsOf { v = table() } === aggregateOnly)
+      assert(v === 0L)
+    }
+  }
+
+  test("the pinned footers give Spark's inferred schema for every table") {
+    val rows = inv.objects("testdb") ++
+      new DirInventory(spark, Map("db" -> multiDb)).objects("db")
+    val manifests = pin(rows)
+    val footers = new PassFooters
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    rows.foreach { r =>
+      val m = manifests((r.database_name, r.schema_name, r.object_name))
+      val inferred = spark.read.parquet(m.paths: _*).schema
+      assert(footers(spark, m).schema === Some(inferred), r.object_name)
+      assert(spark.read.schema(inferred).parquet(m.paths: _*).schema ===
+        inferred, r.object_name)
+    }
+  }
+
+  test("footers are read once per pass and again by the next pass") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pass").toString
+    val tdir = s"$dir/t.parquet"
+    spark.read.parquet(s"$sfDir/region.parquet").coalesce(1)
+      .write.parquet(tdir)
+    val row = InventoryRow("db", "main", "t", "U", 0L, tdir)
+    val m = TableManifest.capture(spark, row)
+    val pass1 = new PassFooters
+    val threads = 8
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    val seen =
+      try {
+        (1 to threads).map(_ => pool.submit(
+          new java.util.concurrent.Callable[graft.checks.TableFooters] {
+            def call() = pass1(spark, m)
+          })).map(_.get())
+      } finally pool.shutdown()
+    assert(seen.forall(_ eq seen.head))
+    assert(seen.head.badFiles === 0L && seen.head.schema.isDefined)
+    // the pinned file is rewritten in place with garbage: the pass keeps
+    // what it read, a new pass reads the file again
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(m.files.head.path.stripPrefix("file:")),
+      Array.fill[Byte](64)(1))
+    assert(pass1(spark, m) eq seen.head)
+    val pass2 = new PassFooters
+    assert(pass2(spark, m) === graft.checks.TableFooters(1L, None))
   }
 }

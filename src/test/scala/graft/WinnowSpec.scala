@@ -67,6 +67,13 @@ class WinnowSpec extends AnyFunSuite {
     assert(kernel("", 8, 16, 8) === Seq.empty)
   }
 
+  test("maxPieces <= 0 keeps no pieces -> empty") {
+    val doc = "the quick brown fox jumps over the lazy dog " * 4
+    assert(kernel(doc, 8, 16, 8).nonEmpty)
+    assert(kernel(doc, 8, 16, 0) === Seq.empty)
+    assert(kernel(doc, 8, 16, -1) === Seq.empty)
+  }
+
   test("shared substrings guarantee shared fingerprint pieces") {
     // winnowing's contract: any common stretch of >= k+w-1 bytes yields at
     // least one common minimum, wherever it sits in either document
