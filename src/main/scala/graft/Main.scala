@@ -364,10 +364,10 @@ object Main {
       return
     }
 
-    val spark = SessionDefaults(SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[32]")),
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .appName("graft").getOrCreate()
+    // SPARK_MASTER (a deployment address) overrides the local master
+    val builder = SessionDefaults.local()
+    sys.env.get("SPARK_MASTER").foreach(builder.master)
+    val spark = builder.appName("graft").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftExtensions.register(spark)
 

@@ -360,31 +360,21 @@ object IncrementalDedup {
   /** Parquet-backed signature store, partitioned by the band-key bucket
     * columns (pb0, pb1) so [[ingest]]'s reads and
     * [[saveIncremental]]'s writes prune to the partitions a batch
-    * touches. Generation discipline:
+    * touches. Generations, crash recovery and the writer lease are
+    * [[graft.tables.GenerationStore]]'s protocol:
     *
-    *  - [[save]] (bootstrap / full rebuild): write to `path.tmp`, then
-    *    swap (path → path.old, tmp → path, drop old). [[load]] FIRST
-    *    COMPLETES any interrupted swap — promote a complete tmp
-    *    generation to `path`, discard an incomplete one, restore from
-    *    `path.old` if a crash left no `path` — and then ALWAYS reads
-    *    from `path`. (Reading the tmp directory lazily, as a previous
-    *    release did, deadlocks the next save(): it must overwrite tmp
-    *    while the loaded plan still reads it.)
-    *  - [[saveIncremental]] (per arriving batch): dynamic partition
-    *    overwrite of ONLY the partitions the batch touched, with the
-    *    partitions' retained rows re-read through a pruned scan and
+    *  - [[save]] (bootstrap / full rebuild) commits a full generation;
+    *    [[load]] recovers first and then always reads `path`.
+    *  - [[saveIncremental]] (per arriving batch) rewrites ONLY the
+    *    partitions the batch touched, as a cell rewrite: the
+    *    partitions' retained rows are re-read through a pruned scan and
     *    materialized BEFORE the overwrite (never read-and-overwrite the
-    *    same files), and the touched partitions' CURRENT content
-    *    archived to `path.bakparts` before the overwrite starts. A
-    *    crash anywhere in the commit leaves every touched partition
-    *    either old-complete (restorable from the archive) or
-    *    new-complete — never LOST, which matters because a partition
-    *    holds untouched co-resident classes a batch replay cannot
-    *    reconstruct. [[recover]] restores any archived partition
-    *    missing from the store, after which the at-least-once replay of
-    *    the batch recomputes every touched partition to the same bytes
-    *    (ingest's membership dedup makes re-arrival idempotent), so the
-    *    store converges on restart.
+    *    same files), and a crash anywhere in the commit rolls every
+    *    touched partition back — a partition holds untouched
+    *    co-resident classes a batch replay cannot reconstruct. The
+    *    at-least-once replay of the batch then recomputes every touched
+    *    partition to the same bytes (ingest's membership dedup makes
+    *    re-arrival idempotent), so the store converges on restart.
     *
     * Both writers repartition on (pb0, pb1) before the partitioned
     * write, so a store lands as ONE file per populated partition cell —
@@ -393,249 +383,83 @@ object IncrementalDedup {
     * the small-file pathology [[graft.maintenance.Compaction]] exists
     * to cure.
     *
-    * The fan-out the store was written with is persisted in
-    * `_graft_meta.json` inside the store directory ([[buckets]] reads
-    * it); a store without the metadata is refused loudly rather than
-    * scanned with a guessed modulus that would silently mis-prune.
-    *
-    * Single-writer is enforced BEST-EFFORT (exactly as strong as the
-    * filesystem's `create(overwrite=false)` — atomic on HDFS-like
-    * stores, check-then-write on the local FS and S3A): [[acquireLease]]
-    * creates `path.lock` with the writer's UUID, re-reads it to verify
-    * the UUID survived (a lost creation race fails loudly), and a stale
-    * lease is only broken by RENAMING the lock aside first, so exactly
-    * one of several would-be breakers wins. The heartbeat
-    * ([[renewLease]]) REWRITES the lock content with a fresh timestamp
-    * (object stores where `setTimes` is a no-op keep working), and
-    * every store write re-verifies ownership, so a writer that lost its
-    * lease aborts instead of interleaving commits (the reference's
-    * queue-claim semantics, DIC:1111 UPDLOCK, in lake form). Staleness
-    * compares the holder's written timestamp with the breaker's clock —
-    * single-host exact, cross-host best-effort under skew. */
-  final class SigStore(spark: SparkSession, path: String) {
+    * The fan-out the store was written with is persisted in the
+    * generation's meta file ([[buckets]] reads it); a store without it
+    * is refused loudly rather than scanned with a guessed modulus that
+    * would silently mis-prune. */
+  final class SigStore(spark: SparkSession, path: String)
+      extends graft.tables.GenerationStore.Leased {
+    protected val gen =
+      new graft.tables.GenerationStore(spark, path, "SigStore")
+
     private def fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    private def bakPath = new Path(path + ".bakparts")
-    private def metaPath(root: String) = new Path(root, "_graft_meta.json")
-
     /** (fan-out, meta-file mtime, meta-file length) — the cached read
-      * of `_graft_meta.json`, revalidated against the file's stat so a
+      * of the meta file, revalidated against the file's stat so a
       * rebuild by another process (new mtime/size) is picked up while
       * the steady-state per-batch call costs one stat instead of a
       * recover-plus-read. */
     @volatile private var metaCache: Option[(Int, Long, Long)] = None
+
+    private def cacheMeta(b: Int): Unit =
+      try {
+        val st = fs.getFileStatus(gen.metaFile(path))
+        metaCache = Some((b, st.getModificationTime, st.getLen))
+      } catch { case _: java.io.IOException => () }
 
     /** The fan-out this store's partition values were computed with.
       * Reads the persisted metadata; a store directory without it is a
       * layout we cannot prune safely — fail actionably. Before any
       * store exists, bootstrap sizing ([[save]]) applies. */
     def buckets: Int = {
-      val mp = metaPath(path)
       val cached = metaCache
       if (cached.isDefined) {
         try {
-          val st = fs.getFileStatus(mp)
+          val st = fs.getFileStatus(gen.metaFile(path))
           val (b, mt, len) = cached.get
           if (st.getModificationTime == mt && st.getLen == len) return b
         } catch { case _: java.io.IOException => () }
       }
-      recover()
-      // the read-only mid-swap window serves pOld (see serveRoot): its
-      // METADATA must come from the same generation, or a reader would
-      // prune pOld's layout with the default modulus
-      val root = serveRoot()
+      gen.recover()
+      // a mid-swap read serves path.old: its metadata must come from
+      // the same generation
+      val root = gen.serveRoot()
       if (!fs.exists(new Path(root))) StoreBuckets
       else {
-        val b = readMeta(root).getOrElse(throw new IllegalStateException(
-          s"SigStore at $path has no _graft_meta.json: its partition " +
-            "fan-out is unknown, and pruning with a guessed modulus " +
-            "would silently miss store rows. Rebuild the store with " +
-            "save() (which records the fan-out) or restore the " +
-            "metadata."))
-        try {
-          val st = fs.getFileStatus(mp)
-          metaCache = Some((b, st.getModificationTime, st.getLen))
-        } catch { case _: java.io.IOException => () }
+        val b = gen.readMeta(root).flatMap(
+          """"buckets"\s*:\s*(\d+)""".r.findFirstMatchIn(_))
+          .map(_.group(1).toInt)
+          .getOrElse(throw new IllegalStateException(
+            s"SigStore at $path has no _graft_meta.json: its partition " +
+              "fan-out is unknown, and pruning with a guessed modulus " +
+              "would silently miss store rows. Rebuild the store with " +
+              "save() (which records the fan-out) or restore the " +
+              "metadata."))
+        cacheMeta(b)
         b
       }
     }
 
-    private def readMeta(root: String): Option[Int] = {
-      val mp = metaPath(root)
-      if (!fs.exists(mp)) None
-      else {
-        val in = fs.open(mp)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        """"buckets"\s*:\s*(\d+)""".r.findFirstMatchIn(txt)
-          .map(_.group(1).toInt)
-      }
-    }
+    /** Complete an interrupted commit (see GenerationStore.recover). */
+    private[pipeline] def recover(): Unit = gen.recover()
 
-    private def writeMeta(root: String, b: Int): Unit = {
-      val out = fs.create(metaPath(root), true)
-      out.writeBytes(s"""{"format":2,"buckets":$b}\n""")
-      out.close()
-    }
-
-    /** Normalize on-disk state so `path` holds the newest COMPLETE
-      * generation, whatever point the last writer died at — including a
-      * writer that died inside [[saveIncremental]]'s partition
-      * overwrite: any partition archived in `path.bakparts` but missing
-      * from the store is restored (old-complete), partitions the
-      * overwrite already committed stay new-complete, and the batch
-      * replay converges the mix. */
-    private[pipeline] def recover(): Unit = {
-      val tmp = new Path(path + ".tmp")
-      val p = new Path(path)
-      val pOld = new Path(path + ".old")
-      if (fs.exists(new Path(tmp, "_SUCCESS")) &&
-          fs.exists(metaPath(path + ".tmp")) && lease.canMaintain) {
-        // interrupted swap with a complete next generation (parquet
-        // commit done AND fan-out metadata recorded): finish it —
-        // but ONLY under the canMaintain discipline (round-13 review):
-        // an unleased reader promoting a complete tmp while a LIVE
-        // leased writer is mid-save() can interleave with the writer's
-        // renames so the reader's trailing pOld cleanup removes the
-        // generation the writer just archived. Gated, readers only
-        // complete swaps left by a DEAD writer (no lock, or stale).
-        // A partition archive from an older interrupted incremental
-        // predates this full rebuild — drop it, never restore it over
-        // the newer generation.
-        // CHECKED renames (round-12 review): two recover() calls can
-        // race here — the loser of either rename must stop (restoring
-        // what it moved), never fall through to a delete that could
-        // drop the only surviving generation. pOld is trashed (not
-        // hard-deleted; TTL-aged sweep below) only by the racer that
-        // COMPLETED the swap.
-        if (fs.exists(bakPath)) fs.delete(bakPath, true)
-        if (fs.exists(pOld)) fs.delete(pOld, true)
-        if (fs.exists(p) && !fs.rename(p, pOld)) return ()
-        if (!fs.rename(tmp, p)) {
-          if (!fs.exists(p) && fs.exists(pOld)) fs.rename(pOld, p)
-          return ()
-        }
-        if (fs.exists(pOld))
-          fs.rename(pOld, new Path(path + ".trash." +
-            System.currentTimeMillis() + "." +
-            java.util.UUID.randomUUID().toString))
-      } else if (fs.exists(tmp) &&
-          !(fs.exists(new Path(tmp, "_SUCCESS")) &&
-            fs.exists(metaPath(path + ".tmp"))) && lease.canMaintain) {
-        // died mid-write: the tmp bytes are garbage. Discarded only
-        // when no LIVE writer could be mid-write to tmp (we hold the
-        // lease, or nobody does) — an unleased reader racing a leased
-        // writer's in-progress tmp write must not delete it
-        // (round-12 review finding).
-        fs.delete(tmp, true)
-      }
-      if (!fs.exists(p) && fs.exists(pOld) && lease.canMaintain) {
-        // died between path→old and tmp→path with tmp already promoted
-        // or lost: the archived generation is the newest complete one.
-        // canMaintain-gated like every other recovery mutation
-        // (round-13 review sweep): p-missing + pOld-present is ALSO a
-        // live writer's save() mid-swap, and an unleased reader
-        // renaming pOld back would make that save fail spuriously —
-        // gated, the reader sees a (transient) absent store instead
-        // and the writer's swap completes.
-        fs.rename(pOld, p)
-      }
-      if (fs.exists(bakPath) && lease.canMaintain) {
-        // interrupted incremental commit: restore every archived
-        // partition the overwrite had removed but not yet rewritten.
-        // canMaintain-gated (round-13 review sweep): a PRESENT bakPath
-        // is also a live writer mid-saveIncremental, and an unleased
-        // reader restoring old partitions into the store the writer is
-        // overwriting — then DELETING the writer's crash-safety
-        // archive — would lose partitions if the writer then crashed.
-        fs.listStatus(bakPath).filter(_.isDirectory).foreach { d0 =>
-          fs.listStatus(d0.getPath).filter(_.isDirectory).foreach { d1 =>
-            val dest = new Path(new Path(p, d0.getPath.getName),
-              d1.getPath.getName)
-            if (!fs.exists(dest)) {
-              fs.mkdirs(dest.getParent)
-              fs.rename(d1.getPath, dest)
-            }
-          }
-        }
-        fs.delete(bakPath, true)
-      }
-      if (fs.exists(p) && lease.canMaintain) {
-        // a crash before the overwrite's commit can leave its staging
-        // dir behind; reads ignore dot-dirs but the garbage accretes.
-        // Swept only when safe (we hold the lease, or no writer holds
-        // one): an unleased read path sweeping under a LIVE writer
-        // would delete its in-flight dynamic-overwrite staging
-        // (round-12 review finding).
-        fs.listStatus(p).filter(s => s.isDirectory &&
-            s.getPath.getName.startsWith(".spark-staging"))
-          .foreach(s => fs.delete(s.getPath, true))
-      }
-      if (lease.canMaintain) {
-        // stray stale-lease tombstones + TTL-aged completed-swap trash
-        // (both shared StoreLease definitions, so the liveness
-        // contract cannot fork between the persisted stores)
-        lease.sweepTombstones()
-        lease.sweepTrash()
-      }
-      ()
-    }
-
-    /** Which generation an UNLEASED read serves while a LIVE writer is
-      * mid-swap (round-13 advice, same pattern as AnnIndexStore): `p`
-      * missing + `pOld` present + canMaintain false is a live save()
-      * between its two renames (or a crashed writer whose lock is not
-      * yet TTL-stale) — recover() correctly refuses to mutate, but the
-      * read path must not report the store ABSENT for up to the lease
-      * TTL. Serve the archived generation READ-ONLY; every mutation
-      * stays lease-gated. */
-    private def serveRoot(): String =
-      if (!fs.exists(new Path(path)) &&
-          fs.exists(new Path(path + ".old")) && !lease.canMaintain)
-        path + ".old"
-      else path
-
-    def load(): Option[DataFrame] = {
-      recover()
-      val root = serveRoot()
-      // memoized-schema read (generation layout is protocol-fixed):
-      // skips the per-call footer-inference job; listing stays per-read
-      if (fs.exists(new Path(root)))
-        try Some(graft.tables.Tables.memoizedParquet(spark, root))
-        catch {
-          // a store EMPTIED by a whole-corpus forget() keeps its root
-          // (metadata, lock) but holds zero data files — schema
-          // inference fails, and the right reading is "no generation"
-          // (callers bootstrap fresh, exactly as before the first
-          // save). Only the genuinely-empty case is translated; any
-          // other inference failure is real corruption and propagates.
-          case e: org.apache.spark.sql.AnalysisException
-              if !hasDataFile(root) => None
-        }
-      else None
-    }
-
-    /** Any leaf parquet file under `root`? (first-hit short-circuit —
-      * only consulted on the load() inference-failure path). */
-    private def hasDataFile(root: String): Boolean = {
-      val it = fs.listFiles(new Path(root), true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
+    /** The newest complete generation (memoized-schema read: the layout
+      * is protocol-fixed, so no per-call footer-inference job; listing
+      * stays per-read). None before the first save, and for a store
+      * emptied by a whole-corpus forget(). */
+    def load(): Option[DataFrame] =
+      gen.load(graft.tables.Tables.memoizedParquet(spark, _))
 
     /** Full-generation swap — bootstrap and rebuilds. `storeFrame` may
       * lazily read from `path` (it usually derives from [[load]]): the
-      * write lands in `path.tmp` first, so the read side is untouched
-      * until the data is durable, and the swap is pure renames. The
-      * fan-out is sized from the corpus ([[chooseBuckets]]) unless
-      * pinned by `fanOut`, recorded in the store's metadata, and the
-      * frame is repartitioned on (pb0, pb1) so each populated partition
-      * cell lands as ONE parquet file. */
+      * write lands in the tmp generation first, so the read side is
+      * untouched until the data is durable. The fan-out is sized from
+      * the corpus ([[chooseBuckets]]) unless pinned by `fanOut`,
+      * recorded in the store's metadata, and the frame is repartitioned
+      * on (pb0, pb1) so each populated partition cell lands as ONE
+      * parquet file. */
     def save(storeFrame: DataFrame, fanOut: Int = 0): Unit = {
-      assertLeaseStillHeld()
       if (fanOut > 0)
         writeGeneration(storeFrame, fanOut)
       else {
@@ -646,54 +470,36 @@ object IncrementalDedup {
       }
     }
 
-    /** Write `frame` as a complete next generation at fan-out `bkts`
-      * (tmp write + metadata + rename swap). `frame` may lazily read
-      * from `path`: nothing under `path` moves until the tmp bytes and
-      * metadata are durable. */
+    /** Commit `frame` as a complete next generation at fan-out `bkts`. */
     private def writeGeneration(frame: DataFrame, bkts: Int): Unit = {
-      val tmp = path + ".tmp"
       val bucketed =
         withStoreBuckets(frame.select((sigCols :+ col("rep")): _*), bkts)
-      // one file per populated cell: cluster rows by cell before the
-      // partitioned write. At fan-out 1 the store IS one cell, so the
-      // degraded layout is literally the flat one — a single file with
-      // pb0/pb1 as data columns, no partition dirs, no dynamic-writer
-      // machinery, no shuffle (narrow coalesce) — readers can't tell
-      // the difference (the pb columns are present either way and
-      // nothing can prune at fan-out 1).
-      if (bkts == 1)
-        bucketed.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-      else
-        bucketed.repartition(col("pb0"), col("pb1"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("pb0", "pb1").parquet(tmp)
-      writeMeta(tmp, bkts)
-      val p = new Path(path)
-      val pOld = new Path(path + ".old")
-      if (fs.exists(bakPath)) fs.delete(bakPath, true)
-      if (fs.exists(pOld)) fs.delete(pOld, true)
-      // every rename checked (round-12 review): an interfering process
-      // (e.g. a racing recover that already promoted this tmp) must
-      // make the swap FAIL LOUDLY with both generations still on disk,
-      // never reach a delete that could drop the only surviving copy
-      if (fs.exists(p) && !fs.rename(p, pOld))
-        throw new IllegalStateException(
-          s"SigStore at $path: could not archive the live generation " +
-            "before the swap (concurrent writer?); store left untouched")
-      if (!fs.rename(new Path(tmp), p)) {
-        if (!fs.exists(p) && fs.exists(pOld)) fs.rename(pOld, p)
-        throw new IllegalStateException(
-          s"SigStore at $path: tmp generation vanished before the " +
-            "swap (a racing recover may have promoted it); re-read " +
-            "the store before retrying")
+      gen.commit(s"""{"format":2,"buckets":$bkts}""") { tmp =>
+        // one file per populated cell: cluster rows by cell before the
+        // partitioned write. At fan-out 1 the store IS one cell, so the
+        // degraded layout is literally the flat one — a single file
+        // with pb0/pb1 as data columns, no partition dirs, no
+        // dynamic-writer machinery, no shuffle (narrow coalesce) —
+        // readers can't tell the difference (the pb columns are
+        // present either way and nothing can prune at fan-out 1).
+        if (bkts == 1)
+          bucketed.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
+        else
+          bucketed.repartition(col("pb0"), col("pb1"))
+            .write.mode(SaveMode.Overwrite)
+            .partitionBy("pb0", "pb1").parquet(tmp)
       }
-      fs.delete(pOld, true)
-      try {
-        val st = fs.getFileStatus(metaPath(path))
-        metaCache = Some((bkts, st.getModificationTime, st.getLen))
-      } catch { case _: java.io.IOException => () }
-      ()
+      cacheMeta(bkts)
     }
+
+    /** Dynamic overwrite of the (pb0, pb1) cells `cells` with `out`,
+      * as a [[graft.tables.GenerationStore.rewriteCells]] cell rewrite. */
+    private def rewrite(cells: Seq[(Int, Int)], out: DataFrame): Unit =
+      gen.rewriteCells(cells.map { case (a, b) => s"pb0=$a/pb1=$b" }) {
+        out.write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("pb0", "pb1").parquet(path)
+      }
 
     /** Per-batch store update: rewrite ONLY the partitions the batch
       * touched. `touched` is [[IngestResult.touched]] — the full new
@@ -712,7 +518,7 @@ object IncrementalDedup {
         partsHint: Seq[(Int, Int)] = Nil,
         rect: Option[DataFrame] = None): Unit = {
       recover()
-      assertLeaseStillHeld()
+      gen.lease.assertStillHeld()
       val bkts = buckets
       // `touched` is typically a projection of a frame `ingest` already
       // checkpointed, so keeping it LAZY here is cheap — and when the
@@ -736,10 +542,10 @@ object IncrementalDedup {
       // `rect`: the caller's CACHED pre-batch rectangle (ingest's OR
       // probe scan — a superset of this AND rectangle), so the
       // retained rows come out of executor-resident blocks instead of
-      // a second disk read of the same partitions (round-14 verdict
-      // #4). Sound because the writer lease guarantees the on-disk
-      // rectangle cannot have changed since ingest read it. Absent,
-      // the pruned disk scan is unchanged.
+      // a second disk read of the same partitions. Sound because the
+      // writer lease guarantees the on-disk rectangle cannot have
+      // changed since ingest read it. Absent, the pruned disk scan is
+      // unchanged.
       val remainder = rect.getOrElse(spark.read.parquet(path))
         .filter(col("pb0").isInCollection(pbs0) &&
           col("pb1").isInCollection(pbs1))
@@ -764,49 +570,17 @@ object IncrementalDedup {
       val out = remainder.unionByName(t.select(storeCols: _*))
         .repartition(col("pb0"), col("pb1"))
         .materialized
-      // ARCHIVE the rectangle's current partitions before the dynamic
-      // overwrite: its commit deletes each target partition dir before
-      // renaming staged files in, and a crash in that window would
-      // otherwise LOSE the partition — including untouched co-resident
-      // classes a batch replay cannot reconstruct. Both union legs are
-      // materialized above (executor-resident, lineage severed), so
-      // nothing below re-reads the files being moved.
-      fs.mkdirs(bakPath)
-      for (a <- pbs0; b <- pbs1) {
-        val part = new Path(path, s"pb0=$a/pb1=$b")
-        if (fs.exists(part)) {
-          val dest = new Path(bakPath, s"pb0=$a/pb1=$b")
-          fs.mkdirs(dest.getParent)
-          fs.rename(part, dest)
-        }
-      }
-      // per-WRITER option, not a session-conf toggle (round-14 review:
-      // the toggle leaked dynamic semantics to any concurrent write in
-      // the same session during the window, and the finally-restore
-      // could clobber a value a concurrent thread had just set; the
-      // ANN store's ingest already uses the scoped spelling)
-      out.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pb0", "pb1").parquet(path)
-      // the dynamic overwrite rewrote partition files two levels deep
-      // under unchanged direct-child names — the one mutation class
-      // the schema memo's child fingerprint cannot always see; drop
-      // the memo so the next read re-infers (round-14 advice)
-      graft.tables.Tables.invalidateSchemaMemo(path)
-      // commit durable: the archived generation of the rectangle is
-      // obsolete (and must not be restored over the new one)
-      fs.delete(bakPath, true)
-      ()
+      rewrite(for (a <- pbs0; b <- pbs1) yield (a, b), out)
     }
 
-    /** TAKEDOWN/RETENTION propagation (round-15 verdict #1): remove
-      * every signature row of `ids` (a doc_id frame — a takedown
-      * notice, PII deletion set, or retention expiry) and repair the
-      * surviving classes' representatives, rewriting ONLY the
-      * partition cells the ids actually live in. The post-forget store
-      * equals [[initialStore]] over (corpus − forgotten) — ForgetSpec
-      * and the ScaleVerify sf1 invariant pin it; re-forgetting the
-      * same set is a no-op (rowsForgotten=0, zero writes).
+    /** TAKEDOWN/RETENTION propagation: remove every signature row of
+      * `ids` (a doc_id frame — a takedown notice, PII deletion set, or
+      * retention expiry) and repair the surviving classes'
+      * representatives, rewriting ONLY the partition cells the ids
+      * actually live in. The post-forget store equals [[initialStore]]
+      * over (corpus − forgotten) — ForgetSpec and the ScaleVerify sf1
+      * invariant pin it; re-forgetting the same set is a no-op
+      * (rowsForgotten=0, zero writes).
       *
       * Work shape at 100 TB:
       *  - LOCATE is one column-pruned scan (doc_id + the two partition
@@ -823,25 +597,20 @@ object IncrementalDedup {
       *    co-resident rows re-read through a pruned scan, reps
       *    recomputed cell-locally (a class lives wholly in its
       *    signature's cell, so no representative outside the touched
-      *    cells can change), archive-then-dynamic-overwrite commit. A
-      *    cell whose every row is forgotten simply stays absent after
-      *    the archive rename — the takedown can empty cells (a fully
-      *    emptied store reads as absent/bootstrap-ready), which ingest
-      *    never does.
+      *    cells can change), committed as a cell rewrite. A cell whose
+      *    every row is forgotten simply stays absent — the takedown can
+      *    empty cells (a fully emptied store reads as
+      *    absent/bootstrap-ready), which ingest never does.
       *
-      * Crash discipline (the saveIncremental archive, with the one
-      * forget-specific caveat): a crash before the overwrite commits
-      * restores every archived partition via [[recover]] — the store
-      * reverts to its pre-forget content and the caller's RETRY
-      * re-forgets (at-least-once, converging, exactly the ingest
-      * replay posture). A crash between the commit and the archive
-      * cleanup can likewise transiently resurrect emptied cells until
-      * the retry; forget() is therefore not DONE until it returns —
-      * callers treating the takedown as legally binding must re-run
-      * on any failure, which the idempotence makes safe. */
+      * A crash before the rewrite is retired rolls the store back to
+      * its pre-forget content, and the caller's RETRY re-forgets
+      * (at-least-once, converging, exactly the ingest replay posture):
+      * forget() is not DONE until it returns, so callers treating the
+      * takedown as legally binding re-run it on any failure, which the
+      * idempotence makes safe. */
     def forget(ids: DataFrame): ForgetReport = {
       recover()
-      assertLeaseStillHeld()
+      gen.lease.assertStillHeld()
       val bkts = buckets
       val loaded = load().getOrElse(return ForgetReport(0L, 0))
       val idsD = ids.select("doc_id").distinct().materialized
@@ -893,40 +662,9 @@ object IncrementalDedup {
       val out = forgetFrame(loaded.filter(cellPred).materialized, idsD)
         .select(storeCols: _*)
         .repartition(col("pb0"), col("pb1"))
-      fs.mkdirs(bakPath)
-      archiveCells.foreach { case (a, b) =>
-        val part = new Path(path, s"pb0=$a/pb1=$b")
-        if (fs.exists(part)) {
-          val dest = new Path(bakPath, s"pb0=$a/pb1=$b")
-          fs.mkdirs(dest.getParent)
-          fs.rename(part, dest)
-        }
-      }
-      out.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pb0", "pb1").parquet(path)
-      graft.tables.Tables.invalidateSchemaMemo(path)
-      fs.delete(bakPath, true)
+      rewrite(archiveCells, out)
       ForgetReport(rows, hit.length)
     }
-
-    /** Writer lease — the proven round-10/11 semantics, extracted to
-      * [[graft.tables.StoreLease]] in round 12 so every persisted
-      * store shares ONE hardened implementation (see its doc for the
-      * create-verify, stale-break and usurpation-abort story). */
-    private val lease = new graft.tables.StoreLease(spark, path, "SigStore")
-
-    def acquireLease(
-        ttlMs: Long = graft.tables.StoreLease.DefaultTtlMs): Unit =
-      lease.acquire(ttlMs)
-
-    def renewLease(): Unit = lease.renew()
-
-    private def assertLeaseStillHeld(): Unit = lease.assertStillHeld()
-
-    def releaseLease(): Unit = lease.release()
-
-    def withLease[T](f: => T): T = lease.withLease(f)
   }
 
   /** The dd16 fixture split: md5 bucket % 5 == 0 → the "arriving" 20%. */

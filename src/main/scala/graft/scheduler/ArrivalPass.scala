@@ -519,37 +519,12 @@ object ArrivalPass {
         // (Forget.hardRetrain) — so a legal-grade erasure is ALSO just
         // a file drop, no CLI run needed
         val hasHardCol = schema.fieldNames.contains("hard")
-        // vanish-only drain (round-18 advice): with an empty unseen
-        // set the stream runs only to COMMIT the tombstone batch —
-        // nothing will be scrubbed, and the guard columns above came
-        // from already-drained historical files — so the absent-store
-        // guard must not apply (a store root removed after those files
-        // drained would otherwise wedge the stage on every pass and
-        // the tombstone batch could never commit)
-        val vanishOnly = newFiles.isEmpty
+        // Test seam: a spec lands a takedown file here, between the
+        // unseen-file listing above and the stream's own listing.
+        graft.streaming.Streams.onPreDrainSnapshot()
         if (!hasDocCol && !hasVecCol)
           ("failed", s"takedown files under $forgetDir carry neither " +
             "a doc_id nor a vec_id column; nothing to propagate")
-        // ABSENT-STORE guard (round-17 advice, mirroring the CLI
-        // --forget's exit(3)): a takedown drained while a targeted
-        // store root is absent/misconfigured would run Forget as a
-        // rows=0 no-op, advance the checkpoint, and permanently
-        // consume the request — the exact '0 rows looks complete'
-        // hazard. Fail WITHOUT advancing the checkpoint; the operator
-        // fixes the config and the same files drain next pass. (An
-        // absent PAIR sink is legitimately empty — scrubPairs handles
-        // it — so only the sig/ann store roots gate, and only when the
-        // drain has NEW files to scrub — see vanishOnly above.)
-        else if (!vanishOnly && hasDocCol && !rootExists(cfg.sigStorePath))
-          ("failed", s"takedown files under $forgetDir target doc_id " +
-            s"but the signature store root ${cfg.sigStorePath} does " +
-            "not exist — draining would consume the request as a " +
-            "no-op; checkpoint NOT advanced")
-        else if (!vanishOnly && hasVecCol && !rootExists(cfg.annStorePath))
-          ("failed", s"takedown files under $forgetDir target vec_id " +
-            s"but the ANN store root ${cfg.annStorePath} does not " +
-            "exist — draining would consume the request as a no-op; " +
-            "checkpoint NOT advanced")
         else {
           import org.apache.spark.sql.functions.{col, count, lit, when,
             input_file_name}
@@ -599,6 +574,29 @@ object ArrivalPass {
               // advice)
               if (docIds.isEmpty && vecIds.isEmpty)
                 emptyFiles.incrementAndGet()
+              // ABSENT-STORE guard, per batch (mirroring the CLI
+              // --forget's exit(3)): ids drained while their store root
+              // is absent/misconfigured would run Forget as a rows=0
+              // no-op and permanently consume the request. The batch
+              // fails instead, so the checkpoint does not advance; the
+              // operator fixes the config and the same file drains next
+              // pass. Checked here, not before the stream, because the
+              // stream plans from its own listing: a file landing after
+              // any earlier probe still passes through this check. An
+              // absent PAIR sink is legitimately empty (scrubPairs
+              // handles it), and a batch with no ids (a vanished file's
+              // tombstone) scrubs nothing, so neither gates.
+              def requireRoot(ids: Option[_], column: String,
+                  what: String, root: String): Unit =
+                if (ids.isDefined && !rootExists(root))
+                  throw new IllegalStateException(
+                    s"takedown file $src under $forgetDir targets $column " +
+                      s"but the $what root $root does not exist — " +
+                      "draining would consume the request as a no-op; " +
+                      "checkpoint NOT advanced")
+              requireRoot(docIds, "doc_id", "signature store",
+                cfg.sigStorePath)
+              requireRoot(vecIds, "vec_id", "ANN store", cfg.annStorePath)
               val ctx = s"queue file=$src batch=$id"
               val out = graft.pipeline.Forget.run(spark, docIds, vecIds,
                 cfg.sigStorePath, cfg.annStorePath, cfg.dedupOut,

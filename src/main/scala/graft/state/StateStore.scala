@@ -3,11 +3,11 @@ package graft.state
 import java.sql.{Date, Timestamp}
 import java.time.{Instant, LocalDate, ZoneOffset}
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 
 import graft.catalog.InventoryRow
 import graft.model.CheckObject
+import graft.tables.GenerationStore
 
 /** Persistent check-history state (SURVEY.md §7.1 step 4) — the lake
   * re-expression of `dbo.CheckTableObjects` + its MERGE
@@ -15,136 +15,33 @@ import graft.model.CheckObject
   *
   * State is one row per table, so it is driver-small by construction even
   * at 100 TB of data under check (100k tables → 100k rows). Persistence is
-  * a parquet dataset rewritten atomically (write-temp-and-swap,
-  * SURVEY.md §7.4 hard-problem #3); the MERGE itself is pure Scala over the
-  * loaded rows, with identical semantics to the reference's 3 clauses.
+  * one parquet generation committed through [[GenerationStore]] under its
+  * writer lease, so a second driver on the same path fails loudly and a
+  * killed run never leaves a half-written history; the MERGE itself is
+  * pure Scala over the loaded rows, with identical semantics to the
+  * reference's 3 clauses.
   */
-final class StateStore(spark: SparkSession, path: String,
-    leaseTtlMs: Long = 10 * 60 * 1000L) {
+final class StateStore(spark: SparkSession, path: String)
+    extends GenerationStore.Leased {
   import spark.implicits._
 
-  private val lockPath = new Path(path + ".lock")
-  private val ownerId = java.util.UUID.randomUUID().toString
+  protected val gen = new GenerationStore(spark, path, "StateStore")
 
-  /** Mutual exclusion for the save() swap — the minimal lake analog of
-    * the reference's queue-claim semantics (ref ola/Queue.sql:7-21: rows
-    * claimed under UPDLOCK so two sessions never run the same work;
-    * dead-session liveness reset at DatabaseIntegrityCheck.sql:1198-1207).
-    * Spark owns parallelism WITHIN a run (SURVEY §2.11), but nothing
-    * stops an operator from launching two drivers against one state
-    * path — without this, the second driver's rename swap silently
-    * clobbers the first's just-written history. The lease is an
-    * exclusively-created marker file: concurrent holders fail LOUDLY;
-    * a holder that died is healed via TTL (a lease older than
-    * `leaseTtlMs` is broken with a warning — save() holds it for
-    * seconds, so minutes-old means a dead driver, the reference's
-    * liveness-reset semantics). */
-  private[graft] def acquireLease(): Unit = {
-    val fs = lockPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(lockPath)) {
-      val age = System.currentTimeMillis() -
-        fs.getFileStatus(lockPath).getModificationTime
-      if (age < leaseTtlMs) throw new IllegalStateException(
-        s"state path is leased by another live run (lock $lockPath, " +
-          s"age ${age} ms < ttl ${leaseTtlMs} ms). Two graft drivers " +
-          "must not share a state path concurrently; if the other " +
-          "driver is dead, the lease self-heals after the ttl")
-      // Break the stale lease by RENAME, not delete: rename is atomic on
-      // HDFS/local, so of two drivers healing the same dead lease exactly
-      // ONE wins the rename — the loser must NOT blind-delete (it could
-      // destroy the winner's fresh lock) and instead loses the race
-      // loudly. (On S3-class stores without atomic rename the lease is
-      // advisory; a conditional-PUT lock service is the real analog.)
-      val broken = new Path(path + s".lock.broken-$ownerId")
-      if (!fs.rename(lockPath, broken)) throw new IllegalStateException(
-        s"stale lease at $lockPath was claimed by another healing driver " +
-          "concurrently — retry after it finishes")
-      System.err.println(
-        s"[state] broke stale lease at $lockPath (age ${age} ms)")
-      fs.delete(broken, false)
-    }
-    try {
-      // create(overwrite=false) is the atomic claim: exactly one of two
-      // racing drivers gets the file, the other lands in catch below
-      val out = fs.create(lockPath, false)
-      try out.write(
-        (s"""{"owner": "$ownerId", """ +
-          s""""acquired_ms": ${System.currentTimeMillis()}}""")
-          .getBytes("UTF-8"))
-      finally out.close()
-    } catch {
-      case e: java.io.IOException => throw new IllegalStateException(
-        s"lost the state-lease race at $lockPath — another run claimed " +
-          "it concurrently", e)
-    }
-  }
+  /** The newest complete generation's rows; empty before the first
+    * save. */
+  def load(): Seq[CheckObject] =
+    gen.load(spark.read.parquet(_))
+      .fold(Seq.empty[CheckObject])(_.as[CheckObject].collect().toSeq)
 
-  /** Release ONLY a lease this instance owns: a delete without the owner
-    * check could destroy the fresh lock of a driver that broke our stale
-    * lease while we were suspended past the ttl. */
-  private[graft] def releaseLease(): Unit = {
-    val fs = lockPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(lockPath)) {
-      val mine = try {
-        val in = fs.open(lockPath)
-        try {
-          val buf = new Array[Byte](4096)
-          val n = math.max(in.read(buf), 0)
-          new String(buf, 0, n, "UTF-8").contains(ownerId)
-        } finally in.close()
-      } catch { case _: java.io.IOException => false }
-      if (mine) fs.delete(lockPath, false)
-    }
-  }
-
-  def load(): Seq[CheckObject] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Crash recovery, newest complete generation first: save() can die
-    // between rename(p, pOld) and rename(pTmp, p) — at that point
-    // '<path>.tmp' already holds the NEWER state, fully written (its
-    // _SUCCESS marker proves the write committed; a crash mid-write
-    // leaves no marker and the tmp is ignored). Fall back to '.old' only
-    // when no complete tmp exists, so the history is never silently
-    // reset and never rolled back when a newer generation survives.
-    // Precedence: a complete tmp beats '<path>' — tmp only survives a
-    // crash between its own commit and the swap, at which point it is
-    // strictly the newer generation (every save() rewrites tmp first).
-    val tmp = new Path(path + ".tmp")
-    val src =
-      if (fs.exists(new Path(tmp, "_SUCCESS"))) Some(path + ".tmp")
-      else if (fs.exists(p)) Some(path)
-      else if (fs.exists(new Path(path + ".old"))) Some(path + ".old")
-      else None
-    src.fold(Seq.empty[CheckObject])(s =>
-      spark.read.parquet(s).as[CheckObject].collect().toSeq)
-  }
-
-  /** Atomic rewrite: write `<path>.tmp`, swap via rename so a killed run
-    * never leaves a half-written state (ref: DBMS atomicity, §7.4 #3).
-    * The whole write+swap runs under the state lease (see acquireLease):
-    * a second driver on the same path fails loudly instead of silently
-    * clobbering the tmp/old/current generation chain. */
-  def save(rows: Seq[CheckObject]): Unit = {
-    acquireLease()
-    try {
-      val ds: Dataset[CheckObject] = rows.toDS()
-      val tmp = path + ".tmp"
-      val old = path + ".old"
-      ds.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-      val p = new Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val pTmp = new Path(tmp)
-      val pOld = new Path(old)
-      if (fs.exists(pOld)) fs.delete(pOld, true)
-      if (fs.exists(p)) fs.rename(p, pOld)
-      fs.rename(pTmp, p)
-      fs.delete(pOld, true)
-    } finally releaseLease()
+  def save(rows: Seq[CheckObject]): Unit = withLease {
+    val ds: Dataset[CheckObject] = rows.toDS()
+    gen.commit(StateStore.Meta)(
+      ds.coalesce(1).write.mode(SaveMode.Overwrite).parquet(_))
   }
 }
 
 object StateStore {
+  private[state] val Meta = """{"format":1}"""
 
   /** The 3-clause MERGE (ref IC:454-484):
     *  - MATCHED            → refresh size/type, re-activate

@@ -530,9 +530,10 @@ object Streams {
 
   /** Non-hidden data files currently under `src`, by bare URI path —
     * the same recursive/hidden-component discipline as the arrival
-    * modes' landing probe (graft.Main.hasLandedFiles). */
+    * modes' landing probe (graft.Main.hasLandedFiles). Zero-length files
+    * are dropped unless `keepEmpty`. */
   private[graft] def listDataFiles(spark: SparkSession,
-      src: String): Seq[String] = {
+      src: String, keepEmpty: Boolean = false): Seq[String] = {
     val raw = new org.apache.hadoop.fs.Path(src)
     val fs = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val srcP = fs.makeQualified(raw)
@@ -540,7 +541,8 @@ object Streams {
     else if (fs.getFileStatus(srcP).isFile) {
       // a single-file table (DuckDB COPY / pandas layout): the file was
       // explicitly named, so no hidden-component filtering applies
-      if (fs.getFileStatus(srcP).getLen > 0) Seq(srcP.toUri.getPath)
+      if (keepEmpty || fs.getFileStatus(srcP).getLen > 0)
+        Seq(srcP.toUri.getPath)
       else Nil
     } else {
       val basePath = srcP.toUri.getPath.stripSuffix("/") + "/"
@@ -551,7 +553,7 @@ object Streams {
         val rel = st.getPath.toUri.getPath.stripPrefix(basePath)
         val hidden = rel.split("/").exists(c =>
           c.startsWith("_") || c.startsWith("."))
-        if (st.isFile && st.getLen > 0 && !hidden)
+        if (st.isFile && (keepEmpty || st.getLen > 0) && !hidden)
           buf += st.getPath.toUri.getPath
       }
       buf.toSeq
@@ -777,10 +779,10 @@ object Streams {
       .toSeq.sorted
   }
 
-  /** Test seam: called right after an ingest drain takes its pre-drain
-    * disk snapshot, BEFORE the stream starts — a spec lands a file here
-    * to deterministically exercise the snapshot→planning window the
-    * mid-drain reconciliation covers. No-op in production. */
+  /** Test seam: called right after an ingest drain (or the forget
+    * queue's drain) takes its pre-drain disk snapshot, BEFORE the stream
+    * starts — a spec lands a file here to deterministically exercise
+    * the snapshot→planning window. No-op in production. */
   private[graft] var onPreDrainSnapshot: () => Unit = () => ()
 
   /** How many landed files `checkpoint` has NOT yet committed — the
@@ -819,11 +821,14 @@ object Streams {
     * cross-filesystem copy, atomic per file on any sane fs. A file
     * that fails its rename (concurrent reader holding it, permissions)
     * is left in place and retried next pass — archival is best-effort
-    * hygiene, never a drain-blocking step. Driver-side metadata only;
-    * zero Spark jobs. Returns how many files moved. */
+    * hygiene, never a drain-blocking step. Zero-length files are
+    * archived too: the stream plans and commits them like any other
+    * file, and left in place they would be re-probed every pass.
+    * Driver-side metadata only; zero Spark jobs. Returns how many files
+    * moved. */
   private[graft] def archiveDrained(spark: SparkSession, src: String,
       checkpoint: String): Long = {
-    val onDisk = listDataFiles(spark, src)
+    val onDisk = listDataFiles(spark, src, keepEmpty = true)
     if (onDisk.isEmpty) return 0L
     val seen = seenFiles(spark, checkpoint)
     val drained = onDisk.filter(seen.contains)

@@ -6,11 +6,10 @@ import org.apache.spark.sql.SparkSession
 /** Best-effort single-writer lease over a persisted store directory —
   * the reference's queue-claim semantics (ola/DatabaseIntegrityCheck
   * .sql:1111 UPDLOCK row claim) in lake form, shared by every
-  * persisted-state tier (SigStore, AnnIndexStore).
+  * persisted store through [[GenerationStore]] (StateStore,
+  * ProfileStore, SigStore, AnnIndexStore) and the arrival pass.
   *
-  * Mechanics (hardened across rounds 10-11 on the SigStore, extracted
-  * verbatim in round 12 so new stores inherit the proven semantics
-  * instead of re-deriving them):
+  * Mechanics:
   *
   *  - the lock file's CONTENT carries holder UUID + heartbeat
   *    timestamp, REWRITTEN (not touched) on renew — object stores
@@ -98,20 +97,16 @@ final class StoreLease(spark: SparkSession, path: String, what: String) {
   }
 
   /** Claim the store for writing (see class doc for the race story).
-    * `ttlMs` is this writer's declared liveness TTL (written into the
-    * lock, honored by every other judge). An EXISTING lock's staleness
-    * is judged by max(ttlMs, the lock's own declared TTL): the holder
-    * declared how long its heartbeats may gap (canMaintain and
-    * assertStillHeld already honor that declaration), so a default-TTL
-    * acquirer must not break a live long-TTL holder (the arrival
-    * pass's 2 h lease) fifteen minutes after its last renew
-    * (round-14 advice). `ttlMs` stays the FLOOR of the patience so an
-    * operator/spec can still declare extra patience of its own. */
+    * `ttlMs` is this writer's declared liveness TTL, written into the
+    * lock. An EXISTING lock's staleness is judged by the TTL its holder
+    * declared — the same judge canMaintain and assertStillHeld use —
+    * so a default-TTL acquirer cannot break a live long-TTL holder (the
+    * arrival pass's 2 h lease) between its renews, and a holder that
+    * declared a short TTL is breakable once that TTL lapses. */
   def acquire(ttlMs: Long = DefaultTtlMs): Unit = {
     myTtlMs = ttlMs
     readLock() match {
-      case Some((holder, hb, lockTtl)) =>
-        val patience = math.max(ttlMs, lockTtl)
+      case Some((holder, hb, patience)) =>
         val age = System.currentTimeMillis() - hb
         if (age < patience) throw new IllegalStateException(
           s"$what at $path is leased to writer $holder " +

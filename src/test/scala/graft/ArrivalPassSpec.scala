@@ -1127,6 +1127,91 @@ class ArrivalPassSpec extends AnyFunSuite {
     assert(sig.load().get.filter($"doc_id" === 101L).count() === 0L)
   }
 
+  test("forget_queue absent-store guard holds per batch: a takedown " +
+      "file landing after the stage's unseen-file listing, while the " +
+      "signature store root is absent, fails its batch instead of " +
+      "draining as a no-op, and drains once the root is back") {
+    val (base, dbs) = fixture()
+    val log = new CommandLog(spark, None)
+    val cfg = ArrivalConfig(
+      landing = s"$base/landing", dbs = dbs,
+      checkpointRoot = s"$base/ckpt", sigStorePath = s"$base/sigs",
+      dedupOut = s"$base/pairs", annStorePath = s"$base/ann")
+    val forgetDir = s"$base/landing/forget"
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def p(x: String) = new org.apache.hadoop.fs.Path(x)
+    // pass 1 bootstraps the stores and drains takedown file A
+    Seq(Tuple1(101L)).toDF("doc_id")
+      .coalesce(1).write.parquet(forgetDir)
+    val r1 = ArrivalPass.run(spark, cfg, log, SystemClock)
+    assert(r1.stages.find(_.stage == "forget_queue").get.status === "ran")
+    // A is back under forget/ (a pass that died between its commit and
+    // its archival), so the queue holds a visible, already-drained
+    // file; X is new, and so are tonight's documents
+    val archived = fs.listStatus(p(s"$forgetDir/_archived"))
+      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+    archived.foreach(a => assert(fs.rename(a, p(s"$forgetDir/${a.getName}"))))
+    Seq(Tuple1(103L)).toDF("doc_id")
+      .coalesce(1).write.mode("append").parquet(forgetDir)
+    val x = graft.streaming.Streams.listDataFiles(spark, forgetDir)
+      .filterNot(f => archived.exists(_.getName == p(f).getName)).head
+    Seq((120L, "web", "a document that lands on the second night"))
+      .toDF("doc_id", "source", "text")
+      .coalesce(1).write.mode("append").parquet(s"$base/landing/documents")
+    // the dedup drain's snapshot removes X, so the forget stage's
+    // unseen-file listing is empty; right after that listing, file Y
+    // lands and the signature store root goes missing
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    try {
+      graft.streaming.Streams.onPreDrainSnapshot = () =>
+        calls.incrementAndGet() match {
+          case 1 => assert(fs.delete(p(x), false))
+          case 2 =>
+            Seq(Tuple1(105L)).toDF("doc_id")
+              .coalesce(1).write.mode("append").parquet(forgetDir)
+            assert(fs.rename(p(s"$base/sigs"), p(s"$base/sigs-aside")))
+          case _ => ()
+        }
+      val r2 = ArrivalPass.run(spark, cfg, log, SystemClock)
+      val f2 = r2.stages.find(_.stage == "forget_queue").get
+      assert(calls.get() === 2, "both snapshot seams must fire")
+      assert(f2.status === "failed" &&
+        f2.detail.contains("does not exist") &&
+        f2.detail.contains("checkpoint NOT advanced"), f2.toString)
+    } finally graft.streaming.Streams.onPreDrainSnapshot = () => ()
+    // the root is back: the next pass drains Y for real
+    assert(fs.rename(p(s"$base/sigs-aside"), p(s"$base/sigs")))
+    val r3 = ArrivalPass.run(spark, cfg, log, SystemClock)
+    val f3 = r3.stages.find(_.stage == "forget_queue").get
+    assert(f3.status === "ran" && f3.detail.contains("sig_rows=1"),
+      f3.toString)
+    assert(new graft.pipeline.IncrementalDedup.SigStore(spark, s"$base/sigs")
+      .load().get.filter($"doc_id" === 105L).count() === 0L)
+  }
+
+  test("forget_queue archives a zero-length takedown file with the " +
+      "rest of the drain, so it is not re-probed on later passes") {
+    val (base, dbs) = fixture()
+    val log = new CommandLog(spark, None)
+    val cfg = ArrivalConfig(
+      landing = s"$base/landing", dbs = dbs,
+      checkpointRoot = s"$base/ckpt", sigStorePath = s"$base/sigs",
+      dedupOut = s"$base/pairs", annStorePath = s"$base/ann")
+    val forgetDir = s"$base/landing/forget"
+    Seq(Tuple1(101L)).toDF("doc_id")
+      .coalesce(1).write.parquet(forgetDir)
+    val empty = new java.io.File(s"$forgetDir/part-empty.parquet")
+    assert(empty.createNewFile() && empty.length() == 0L)
+    val r = ArrivalPass.run(spark, cfg, log, SystemClock)
+    val f = r.stages.find(_.stage == "forget_queue").get
+    assert(f.status === "ran" &&
+      f.detail.contains("archived=2 drained file(s)"), f.toString)
+    assert(!empty.exists(), "the zero-length file stayed in the queue")
+    assert(new java.io.File(s"$forgetDir/_archived/part-empty.parquet")
+      .exists())
+  }
+
   test("forget_queue flags an all-null-id file loudly (round-17 " +
       "advice): a misspelled id column beside valid files is consumed " +
       "but surfaces EMPTY_NOOP_FILES in the stage detail, never a " +

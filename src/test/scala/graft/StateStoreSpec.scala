@@ -141,7 +141,7 @@ class StateStoreSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException] {
       store2.save(Seq(obj(1, "a")))
     }
-    assert(e.getMessage.contains("leased by another live run"))
+    assert(e.getMessage.contains("is leased to writer"))
     // the loser must not have clobbered anything
     assert(store1.load().isEmpty)
     store1.releaseLease()
@@ -153,10 +153,10 @@ class StateStoreSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     val dir = java.nio.file.Files.createTempDirectory("graft-state").toString
     val crashed = new graft.state.StateStore(spark, s"$dir/state")
-    crashed.acquireLease() // driver dies here, lease left behind
+    // driver dies here, lease left behind; its lock declares a 1 ms TTL
+    crashed.acquireLease(ttlMs = 1L)
     Thread.sleep(10)
-    val healer = new graft.state.StateStore(spark, s"$dir/state",
-      leaseTtlMs = 1L)
+    val healer = new graft.state.StateStore(spark, s"$dir/state")
     healer.save(Seq(obj(1, "a"))) // breaks the stale lease, then proceeds
     assert(healer.load().size === 1)
   }
